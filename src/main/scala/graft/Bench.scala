@@ -1,4 +1,5 @@
 package graft
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark driver: times every declared query at the SF directory in
@@ -406,21 +407,20 @@ object Bench {
   }
 
   /** Per-query DuckDB seconds recorded by scripts/oracle_bench.py, if a
-    * times file for this SF is committed. Flat hand-rolled parse — the
-    * file is machine-written `"name": 1.23` pairs; no JSON lib needed. */
+    * times file for this SF is committed. */
   private def oracleTimes(sfDir: String): Option[Map[String, Double]] = {
     val sfName = new java.io.File(sfDir).getName
     val f = new java.io.File(s"scripts/oracle_times_$sfName.json")
-    if (!f.isFile) return None
-    val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    val entry = """"([A-Za-z0-9_]+)":\s*([0-9]+\.?[0-9]*)""".r
-    // the _meta block carries no query-shaped keys except numeric fields
-    // (recorded_unix, load_avg, threads); exclude them by name
-    val meta = Set("recorded_unix", "load_avg", "threads")
-    val m = entry.findAllMatchIn(text)
-      .map(x => x.group(1) -> x.group(2).toDouble)
-      .filterNot { case (k, _) => meta.contains(k) }
-      .toMap
-    if (m.isEmpty) None else Some(m)
+    if (!f.isFile) None
+    else Some(parseOracleTimes(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+      .filter(_.nonEmpty)
   }
+
+  /** The numeric entries of the times file's `"times"` object only: the
+    * `_meta` block's numbers (`runs`, `steal.before_pct`, …) never enter. */
+  private[graft] def parseOracleTimes(text: String): Map[String, Double] =
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(text).path("times")
+      .properties().asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap
 }

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ops.{Notifiers, Publish, RunPipeline}
 import graft.sources._
 
@@ -181,31 +184,24 @@ object Main {
         spark.stop()
 
       case "publish" =>
-        val spark = session()
-        import spark.implicits._
         val workDir = arg(rest, "--work-dir").getOrElse(
           throw new ConfigError("--work-dir is required"))
         arg(rest, "--summary").flatMap(loadSummaryDecision)
           .foreach(d => System.err.println(s"[publish] run summary decision=$d"))
-        val records = RunPipeline.loadState(spark, s"$workDir/normalized.jsonl")
-        if (records.isEmpty) throw new PublishError("no normalized records")
-        if (records.length > 1)
-          System.err.println(s"[publish] ${records.length} records; using first")
-        val rows = Publish.recordToRows(spark.createDataset(records.take(1)))
         val sheetDir = arg(rest, "--sheet-dir").getOrElse(s"$workDir/sheets")
-        if (flag(rest, "--dry-run")) {
-          val current = graft.sources.SheetBackend.readRows(sheetDir, "canonical")
-          println(Publish.dryRunDiff(current, rows))
-        } else {
+        if (flag(rest, "--dry-run")) println(Publish.dryRun(workDir, sheetDir))
+        else {
+          val rows = Publish.rows(Publish.publishedRecord(workDir))
           // truncate+overwrite via the DSv2 connector (format("sheet"))
-          val stringRows = rows.select(rows.columns.map(c =>
-            coalesce(col(c).cast("string"), lit("")).as(c)): _*)
-          stringRows.write.format("sheet")
+          val spark = session()
+          spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+              StructType(Publish.headerOf(rows).map(StructField(_, StringType))))
+            .write.format("sheet")
             .option("path", sheetDir).option("worksheet", "canonical")
             .mode("append").save()
-          println(s"updated_rows=${rows.count()}")
+          println(s"updated_rows=${rows.length}")
+          spark.stop()
         }
-        spark.stop()
 
       case "curate" =>
         // training-data curation over a documents parquet: writes the

@@ -1,9 +1,21 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, MapperFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import com.fasterxml.jackson.module.scala.introspect.ScalaAnnotationIntrospectorModule
+
 /** Fixed, declared schemas for the pipeline's record types (SURVEY §1.1).
   * The reference flows schema-implicit dicts; here every artifact is a
-  * case class with a Spark Encoder, so JSONL artifacts round-trip through
-  * `spark.read.schema(...).json` and `Dataset.toJSON`.
+  * case class. The EP1/EP2 control plane runs on the driver: [[Model.Json]]
+  * writes and reads the single-record JSONL artifacts without a
+  * SparkSession, in the bytes Spark's own JSON encoders would produce.
+  * The one Spark action of a run is the consensus merge, which takes the
+  * collected payloads as a `Dataset[SourcePayload]`.
   */
 object Model {
 
@@ -76,4 +88,55 @@ object Model {
       api_version: String)
 
   val ApiVersion = "v1.2"
+
+  /** Spark's order for STRING values (unsigned UTF-8 bytes), so categories
+    * sort on the driver exactly as under `orderBy("categoria")`. */
+  val SparkStringOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = java.util.Arrays.compareUnsigned(
+      a.getBytes(StandardCharsets.UTF_8), b.getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** Driver-side JSON codec for the records above.
+    *
+    * Writes: `line(x)` equals `spark.createDataset(Seq(x)).toJSON.head()`,
+    * and `line` of a nested value equals Spark's `to_json` of it — fields
+    * in declaration order, `None` omitted (Spark drops null fields), maps
+    * in iteration order, no whitespace. Both sides drive the same
+    * jackson-core generator, so numbers and string escapes agree.
+    *
+    * Reads: `record(line)` keeps the lines Spark's PERMISSIVE scan with
+    * the `NormalizedRecord` schema keeps, and decodes them alike: blank,
+    * malformed and wrongly typed lines are dropped, unknown fields are
+    * ignored, a number in a string field reads as its text. Two settings
+    * make Jackson as strict as Spark on numbers: no float-to-integer and
+    * no string-to-number coercion. Two shapes Spark keeps are dropped
+    * here: an object or array in a string field (Spark keeps its JSON
+    * text) and a line holding a JSON array (Spark reads one row per
+    * element). The control plane writes neither.
+    */
+  object Json {
+    // jackson-module-scala sees `Option[Long]` and `Map[String, Long]` as
+    // erased generics and would box small values as Integer; the element
+    // types are registered for every such field `record` decodes.
+    Seq(classOf[NormalizedRecord] -> "sorteo", classOf[NormalizedRecord] -> "pozos_proximo",
+        classOf[SourceDesc] -> "sorteo").foreach { case (c, f) =>
+      ScalaAnnotationIntrospectorModule.registerReferencedValueType(c, f, classOf[Long])
+    }
+
+    private val mapper = JsonMapper.builder()
+      .addModule(DefaultScalaModule)
+      .defaultPropertyInclusion(JsonInclude.Value.construct(
+        JsonInclude.Include.NON_ABSENT, JsonInclude.Include.ALWAYS))
+      .disable(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES)
+      .disable(DeserializationFeature.ACCEPT_FLOAT_AS_INT)
+      .disable(MapperFeature.ALLOW_COERCION_OF_SCALARS)
+      .build()
+
+    def line(value: AnyRef): String = mapper.writeValueAsString(value)
+
+    def record(line: String): Option[NormalizedRecord] =
+      if (line.trim.isEmpty) None
+      else try Option(mapper.readValue(line, classOf[NormalizedRecord]))
+      catch { case _: JsonProcessingException => None }
+  }
 }

@@ -1,69 +1,61 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import graft.PublishError
 import graft.Model._
+import graft.sources.SheetBackend
 
 /** Publish path (reference `polla_app/publish.py`).
   *
-  * Row conversion is set-at-a-time (explode/unpivot, `publish.py:69-116`);
-  * the sheet itself is dimension-sized so the sink collects to the driver
-  * and talks to a pluggable [[SheetsClient]] — the same split the
-  * reference's gspread client implies. Dry-run = diff mode: both
-  * directions of `exceptAll` plus a rendered unified-ish text diff
-  * (`publish.py:249-266`).
+  * Runs on the driver: the published record is one line of
+  * `normalized.jsonl`, read with [[graft.Model.Json]], and its sheet rows
+  * (`publish.py:69-116`) are rendered here as cells — the dry-run needs no
+  * SparkSession. The sheet itself talks to a pluggable [[SheetsClient]] —
+  * the same split the reference's gspread client implies — or, from the
+  * CLI, to the DSv2 `format("sheet")` connector fed these same rows.
+  * Dry-run = diff mode: the proposed sheet against the current one as a
+  * rendered unified-ish text diff (`publish.py:249-266`).
   */
 object Publish {
 
-  /** Pozos-only 4-col rows: sorteo, fecha, categoria, pozo_clp
-    * (`publish.py:95-100`). Map iteration order is not semantic in Spark —
-    * rows are ordered by categoria, which our sinks make explicit. */
-  def pozoRows(records: Dataset[NormalizedRecord]): DataFrame =
-    records.toDF()
-      .select(col("sorteo"), col("fecha"),
-        explode(col("pozos_proximo")).as(Seq("categoria", "pozo_clp")))
-      .orderBy("categoria")
+  private def cell(v: Option[Any]): String = v.fold("")(_.toString)
 
-  /** Premios-mode 8-col rows (`publish.py:80-92`). */
-  def premioRows(records: Dataset[NormalizedRecord]): DataFrame =
-    records.toDF()
-      .withColumn("pozos_proximo_json", to_json(col("pozos_proximo")))
-      .withColumn("provenance_json", to_json(col("provenance")))
-      .select(col("sorteo"), col("fecha"), col("fuente"),
-        explode(col("premios")).as("p"),
-        col("pozos_proximo_json"), col("provenance_json"))
-      .select(col("sorteo"), col("fecha"), col("fuente"),
-        col("p.categoria").as("categoria"),
-        col("p.premio_clp").as("premio_clp"),
-        col("p.ganadores").as("ganadores"),
-        col("pozos_proximo_json").as("pozos_proximo"),
-        col("provenance_json").as("provenance"))
-      .orderBy("categoria")
+  /** Sheet rows of one record, as cells (None → ""), ordered by categoria
+    * (`publish.py:69-100`): pozos-only 4-col rows (sorteo, fecha,
+    * categoria, pozo_clp), or, when premios are present, 8-col rows (sorteo,
+    * fecha, fuente, categoria, premio_clp, ganadores, then pozos_proximo
+    * and provenance as JSON). */
+  def rows(r: NormalizedRecord): Seq[Seq[String]] =
+    if (r.premios.isEmpty)
+      r.pozos_proximo.toSeq.sortBy(_._1)(SparkStringOrder).map { case (categoria, pozo) =>
+        Seq(cell(r.sorteo), cell(r.fecha), categoria, pozo.toString)
+      }
+    else {
+      val pozos = Json.line(r.pozos_proximo)
+      val provenance = Json.line(r.provenance)
+      r.premios.sortBy(_.categoria)(SparkStringOrder).map { p =>
+        Seq(cell(r.sorteo), cell(r.fecha), cell(r.fuente), p.categoria,
+          p.premio_clp.toString, p.ganadores.toString, pozos, provenance)
+      }
+    }
 
-  /** Mode switch (`publish.py:69-79`): premios present → 8-col else 4-col. */
-  def recordToRows(records: Dataset[NormalizedRecord]): DataFrame = {
-    val hasPremios = !records.isEmpty &&
-      records.toDF().select(size(col("premios"))).head().getInt(0) > 0
-    if (hasPremios) premioRows(records) else pozoRows(records)
-  }
-
-  /** Discrepancy rows (`publish.py:103-116`): sorteo, categoria,
-    * consensus/disagreeing as JSON, missing as ", "-joined. */
-  def mismatchRows(report: Dataset[Report]): DataFrame =
-    report.toDF()
-      .select(col("last_draw.sorteo").as("sorteo"), explode(col("mismatches")).as("m"))
-      .select(col("sorteo"),
-        col("m.categoria").as("categoria"),
-        to_json(col("m.consensus")).as("consensus"),
-        to_json(col("m.disagreeing")).as("disagreeing"),
-        array_join(col("m.missing_sources"), ", ").as("missing_sources"))
-      .orderBy("categoria")
+  /** Discrepancy rows of one report (`publish.py:103-116`): sorteo,
+    * categoria, consensus/disagreeing as JSON, missing as ", "-joined. */
+  def mismatchRows(report: Report): Seq[Seq[String]] =
+    report.mismatches.sortBy(_.categoria)(SparkStringOrder).map { m =>
+      Seq(cell(report.last_draw.sorteo), m.categoria, Json.line(m.consensus),
+        Json.line(m.disagreeing), m.missing_sources.mkString(", "))
+    }
 
   /** Header by row width (`publish.py:136-150`). */
   def headerFor(width: Int): Seq[String] =
     if (width == 4) Seq("sorteo", "fecha", "categoria", "pozo_clp")
     else Seq("sorteo", "fecha", "fuente", "categoria", "premio_clp",
       "ganadores", "pozos_proximo", "provenance")
+
+  /** Header of rendered rows; no rows is a pozos-only record with no
+    * categories, so 4-col. */
+  def headerOf(rows: Seq[Seq[String]]): Seq[String] =
+    headerFor(rows.headOption.fold(4)(_.length))
 
   val mismatchHeader: Seq[String] =
     Seq("sorteo", "categoria", "consensus", "disagreeing", "missing_sources")
@@ -73,19 +65,20 @@ object Publish {
   def publishAllowed(reportStatus: String, summaryPublish: Option[Boolean]): Boolean =
     summaryPublish.getOrElse(reportStatus.toLowerCase.startsWith("publish"))
 
-  /** Sheet-shaped string cells (None → ""), matching the reference's
-    * `", ".join(map(str, row))` comparisons. */
-  private def cells(df: DataFrame): Seq[Seq[String]] =
-    df.collect().toSeq.map(_.toSeq.map {
-      case null => ""
-      case v => v.toString
-    })
+  /** The record to publish: the first line of `<workDir>/normalized.jsonl`
+    * (the run writes exactly one). None readable → PublishError. */
+  def publishedRecord(workDir: String): NormalizedRecord = {
+    val records = RunPipeline.loadState(s"$workDir/normalized.jsonl")
+    if (records.isEmpty) throw new PublishError("no normalized records")
+    if (records.length > 1)
+      System.err.println(s"[publish] ${records.length} records; using first")
+    records.head
+  }
 
   /** Dry-run diff (`publish.py:249-266`): current sheet vs header+rows as
     * comma-joined lines, unified-diff-flavored rendering. */
-  def dryRunDiff(current: Seq[Seq[String]], proposed: DataFrame): String = {
-    val header = headerFor(proposed.columns.length).map(identity)
-    val proposedLines = (header +: cells(proposed)).map(_.mkString(", "))
+  def dryRunDiff(current: Seq[Seq[String]], rows: Seq[Seq[String]]): String = {
+    val proposedLines = (headerOf(rows) +: rows).map(_.mkString(", "))
     val currentLines = current.map(_.mkString(", "))
     if (currentLines == proposedLines) "(No changes detected against the current sheet)"
     else {
@@ -94,6 +87,11 @@ object Publish {
       (Seq("--- sheet:current", "+++ proposed_update") ++ removed ++ added).mkString("\n")
     }
   }
+
+  /** `publish --dry-run`: the published record's rows diffed against the
+    * canonical worksheet under `sheetDir`. Reads two small files; no Spark. */
+  def dryRun(workDir: String, sheetDir: String): String =
+    dryRunDiff(SheetBackend.readRows(sheetDir, "canonical"), rows(publishedRecord(workDir)))
 
   /** Service-account credential resolution (`publish.py:24-46`): a
     * `service_account.json` in the working directory wins (developer
@@ -145,24 +143,20 @@ object Publish {
 
   /** Canonical worksheet write (`publish.py:161-171`): header + rows;
     * empty rows → no write, returns 0. */
-  def updateCanonical(client: SheetsClient, worksheet: String, rows: DataFrame): Int = {
-    val data = cells(rows)
-    if (data.isEmpty) 0
+  def updateCanonical(client: SheetsClient, worksheet: String, rows: Seq[Seq[String]]): Int =
+    if (rows.isEmpty) 0
     else {
-      client.clearAndUpdate(worksheet, headerFor(rows.columns.length) +: data)
-      data.length
+      client.clearAndUpdate(worksheet, headerOf(rows) +: rows)
+      rows.length
     }
-  }
 
   /** Discrepancy sheet write (`publish.py:174-193`): placeholder row when
     * empty and quarantine allowed; no write when empty otherwise. */
   def updateDiscrepancy(client: SheetsClient, worksheet: String,
-      rows: DataFrame, lastDrawSorteo: Option[Long], allowQuarantine: Boolean): Unit = {
-    val data = cells(rows)
-    if (data.nonEmpty || allowQuarantine) {
-      val body = if (data.nonEmpty) data
+      rows: Seq[Seq[String]], lastDrawSorteo: Option[Long], allowQuarantine: Boolean): Unit =
+    if (rows.nonEmpty || allowQuarantine) {
+      val body = if (rows.nonEmpty) rows
         else Seq(Seq(lastDrawSorteo.map(_.toString).getOrElse(""), "", "", "", ""))
       client.clearAndUpdate(worksheet, mismatchHeader +: body)
     }
-  }
 }

@@ -1,8 +1,10 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 
 import graft.Model._
 import graft.sources.PozoSource
@@ -10,15 +12,17 @@ import graft.sources.PozoSource
 /** EP1 — the ingest pipeline (reference `pipeline.py:352-528`, traced in
   * SURVEY §3).
   *
-  * Spark-first split: fetch is driver-orchestrated (2 stateful sources —
-  * the reference is the same), everything set-shaped (consensus, scalars,
-  * change detection) runs as DataFrame ops, and the single-record
-  * control-plane artifacts (normalized/state/report/summary JSONL) are
-  * written atomically (temp+rename — the reference truncate-writes,
-  * `pipeline.py:437`) using Spark's own JSON encoders for byte-compatible
-  * lines. Side-effect ordering preserved from the reference: raw artifacts
-  * → read state → write normalized+state (unconditionally, *before* the
-  * decision) → report/summary → notify.
+  * The control plane runs on the driver: fetch is driver-orchestrated (2
+  * stateful sources — the reference is the same), and the single-record
+  * artifacts (raw payloads, normalized/state/report/summary JSONL) are
+  * encoded and the state file decoded by [[graft.Model.Json]], in the bytes
+  * Spark's JSON encoders would write. Consensus is the one Spark action:
+  * `Consensus.merge` over the collected payloads, collected whole (one row
+  * per category). Artifacts are written atomically (temp+rename — the
+  * reference truncate-writes, `pipeline.py:437`). Side-effect ordering
+  * preserved from the reference: raw artifacts → read state → write
+  * normalized+state (unconditionally, *before* the decision) →
+  * report/summary → notify.
   */
 object RunPipeline {
 
@@ -77,11 +81,11 @@ object RunPipeline {
       throw new RuntimeException(
         s"No sources returned data for ${cfg.requestedSources.mkString(",")}")
 
-    val payloads = spark.createDataset(collected).toDF()
-
-    // 2-3. Consensus merge + scalars (distributed; SURVEY §2.4).
+    // 2-3. Consensus merge + scalars (SURVEY §2.4): the run's one Spark
+    //    action. Its rows have a unique categoria, so they sort here.
     val mergeRows = Observability.span(spark, log, "consensus_merge", now = cfg.now) {
-      Consensus.merge(payloads).orderBy("categoria").collect()
+      Consensus.merge(spark.createDataset(collected).toDF()).collect()
+        .sortBy(_.getAs[String]("categoria"))(SparkStringOrder)
     }
     val resolved = mergeRows.map(r =>
       r.getAs[String]("categoria") -> r.getAs[Long]("valor")).toMap
@@ -139,19 +143,15 @@ object RunPipeline {
           cfg.requestedSources.head
         else Option(new java.net.URI(p.fuente).getHost)
           .map(_.replace(".", "_")).getOrElse("source")
-      writeAtomic(rawDir.resolve(s"$fname.json"),
-        spark.createDataset(Seq(p)).toJSON.head() + "\n")
+      writeAtomic(rawDir.resolve(s"$fname.json"), Json.line(p) + "\n")
     }
 
-    // 6. Previous state: PERMISSIVE JSONL scan tolerating corrupt lines
+    // 6. Previous state: JSONL read tolerating corrupt lines
     //    (reference `pipeline.py:66-79`).
     val statePath = Paths.get(cfg.workDir, "state", "last_run.jsonl")
-    val previous = loadState(spark, statePath.toString)
+    val previous = loadState(statePath.toString)
 
     // 7. Change detection (reference `pipeline.py:257-285`).
-    val currentDf = spark.createDataset(Seq(record)).toDF()
-      .select(col("sorteo"), col("fecha"),
-        col("provenance.pozos.primary.sha256").as("sha256"), col("pozos_proximo"))
     val unchanged = previous.exists { prev =>
       prev.sorteo == record.sorteo && prev.fecha == record.fecha && {
         val shaEq = (for {
@@ -164,7 +164,7 @@ object RunPipeline {
 
     // 8. Normalized + state written unconditionally, BEFORE the decision
     //    (reference `pipeline.py:436-437`).
-    val recordJson = spark.createDataset(Seq(record)).toJSON.head() + "\n"
+    val recordJson = Json.line(record) + "\n"
     writeAtomic(Paths.get(cfg.workDir, "normalized.jsonl"), recordJson)
     writeAtomic(statePath, recordJson)
 
@@ -184,10 +184,8 @@ object RunPipeline {
       publish_reason = reason, api_version = ApiVersion)
 
     // 10. Report + summary sinks.
-    writeAtomic(Paths.get(cfg.workDir, "comparison_report.json"),
-      spark.createDataset(Seq(report)).toJSON.head() + "\n")
-    writeAtomic(Paths.get(cfg.workDir, "run_summary.json"),
-      spark.createDataset(Seq(summary)).toJSON.head() + "\n")
+    writeAtomic(Paths.get(cfg.workDir, "comparison_report.json"), Json.line(report) + "\n")
+    writeAtomic(Paths.get(cfg.workDir, "run_summary.json"), Json.line(summary) + "\n")
 
     log.emit(Observability.Event("pipeline_end", cfg.now(), cfg.runId,
       Map("decision" -> status, "publish" -> publishFlag.toString,
@@ -197,21 +195,15 @@ object RunPipeline {
     Result(summary, report, record, collected)
   }
 
-  /** PERMISSIVE JSONL state scan; corrupt/blank lines skipped
-    * (reference `pipeline.py:66-79`). */
-  def loadState(spark: SparkSession, path: String): Seq[NormalizedRecord] = {
-    if (!Files.exists(Paths.get(path))) return Seq.empty
-    import spark.implicits._
-    val schema = Encoders.product[NormalizedRecord].schema
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType)
-    spark.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record")
-      .as[NormalizedRecord]
-      .collect().toSeq
+  /** JSONL state read; blank, corrupt and wrongly typed lines are skipped
+    * (reference `pipeline.py:66-79`), as Spark's PERMISSIVE scan with the
+    * record schema skips them (see [[graft.Model.Json]] for the edges).
+    * Invalid UTF-8 decodes to U+FFFD, where Spark's scan drops the line. */
+  def loadState(path: String): Seq[NormalizedRecord] = {
+    val p = Paths.get(path)
+    if (!Files.exists(p)) Seq.empty
+    else new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      .lines().iterator().asScala.flatMap(Json.record).toSeq
   }
 
   private def writeAtomic(path: Path, content: String): Unit = {

@@ -119,7 +119,7 @@ class PipelineSpec extends SparkSpec {
     RunPipeline.run(spark, Seq(
       stub("a", 0, Map("Loto" -> 1000L, "Recargado" -> 5L)),
       stub("b", 1, Map("Loto" -> 1200L))), cfg(dir))
-    val back = RunPipeline.loadState(spark, s"$dir/normalized.jsonl")
+    val back = RunPipeline.loadState(s"$dir/normalized.jsonl")
     assert(back.length == 1)
     assert(back.head.pozos_proximo == Map("Loto" -> 1000L, "Recargado" -> 5L))
     assert(back.head.provenance.pozos.primary.fuente.contains("https://a.cl/path"))

@@ -1,11 +1,14 @@
 package graft
 
+import org.scalatest.funsuite.AnyFunSuite
 import graft.Model._
 import graft.ops.{Notifiers, Publish}
+import graft.sources.SheetBackend
 
 /** Publish path semantics (reference `tests/test_publish.py:38-240`,
-  * `tests/test_phase4.py:12-44`). */
-class PublishSpec extends SparkSpec {
+  * `tests/test_phase4.py:12-44`). Publish runs on the driver, so no
+  * SparkSession is started here. */
+class PublishSpec extends AnyFunSuite {
 
   private val desc = SourceDesc(Some("https://a.cl/"), Some("2026-08-12T00:00:00Z"),
     Some("sha"), Some("UA"), estimado = true, Some(5417L), Some("2026-04-26"))
@@ -15,10 +18,9 @@ class PublishSpec extends SparkSpec {
     Some(5417L), Some("2026-04-26"), Some("https://a.cl/"), "full",
     premios, Map("Loto" -> 1000L, "Desquite" -> 510L), prov)
 
-  private def ds(r: NormalizedRecord) = {
-    import spark.implicits._
-    spark.createDataset(Seq(r))
-  }
+  /** Cells of one rendered row by column name. */
+  private def byName(row: Seq[String]): Map[String, String] =
+    Publish.headerFor(row.length).zip(row).toMap
 
   test("credential chain: file > env triple, in order; empty file errors") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cred")
@@ -59,27 +61,26 @@ class PublishSpec extends SparkSpec {
   }
 
   test("pozos-only mode → 4-col rows ordered by categoria") {
-    val rows = Publish.recordToRows(ds(record())).collect()
-    assert(rows.map(_.toSeq) sameElements Array(
-      Seq(5417L, "2026-04-26", "Desquite", 510L),
-      Seq(5417L, "2026-04-26", "Loto", 1000L)))
+    val rows = Publish.rows(record())
+    assert(rows == Seq(
+      Seq("5417", "2026-04-26", "Desquite", "510"),
+      Seq("5417", "2026-04-26", "Loto", "1000")))
     assert(Publish.headerFor(4) == Seq("sorteo", "fecha", "categoria", "pozo_clp"))
   }
 
   test("premios mode → 8-col rows with serialized pozos/provenance") {
     val r = record(Seq(Premio("1 acierto", 100L, 2L), Premio("6 aciertos", 900L, 0L)))
-    val rows = Publish.recordToRows(ds(r)).collect()
+    val rows = Publish.rows(r)
     assert(rows.length == 2)
-    val first = rows.head
-    assert(first.getAs[String]("categoria") == "1 acierto")
-    assert(first.getAs[Long]("premio_clp") == 100L)
-    assert(first.getAs[String]("pozos_proximo").contains("\"Loto\":1000"))
-    assert(first.getAs[String]("provenance").contains("https://a.cl/"))
+    val first = byName(rows.head)
+    assert(first("categoria") == "1 acierto")
+    assert(first("premio_clp") == "100")
+    assert(first("pozos_proximo").contains("\"Loto\":1000"))
+    assert(first("provenance").contains("https://a.cl/"))
     assert(Publish.headerFor(8).head == "sorteo")
   }
 
   test("mismatch rows explode with JSON cells and joined missing list") {
-    import spark.implicits._
     val rep = Report(
       RunInfo("r", "t", Seq("pozos"), 30, 3, fail_fast = false),
       LastDraw(Some(5198L), None),
@@ -87,11 +88,12 @@ class PublishSpec extends SparkSpec {
       Seq(Mismatch("Loto", Map("1000" -> Seq("a")), Map("1200" -> Seq("c")),
         Some(0.2), Seq("b", "d"))),
       ApiVersion)
-    val rows = Publish.mismatchRows(spark.createDataset(Seq(rep))).collect()
+    val rows = Publish.mismatchRows(rep)
     assert(rows.length == 1)
-    assert(rows.head.getAs[Long]("sorteo") == 5198L)
-    assert(rows.head.getAs[String]("consensus").contains("\"1000\":[\"a\"]"))
-    assert(rows.head.getAs[String]("missing_sources") == "b, d")
+    val cells = Publish.mismatchHeader.zip(rows.head).toMap
+    assert(cells("sorteo") == "5198")
+    assert(cells("consensus").contains("\"1000\":[\"a\"]"))
+    assert(cells("missing_sources") == "b, d")
   }
 
   test("publish gate: status prefix + summary override") {
@@ -105,19 +107,18 @@ class PublishSpec extends SparkSpec {
 
   test("canonical sheet write: header + rows; empty → no write") {
     val c = new Publish.InMemorySheets
-    val n = Publish.updateCanonical(c, "canon", Publish.recordToRows(ds(record())))
+    val n = Publish.updateCanonical(c, "canon", Publish.rows(record()))
     assert(n == 2)
     assert(c.sheets("canon").head == Seq("sorteo", "fecha", "categoria", "pozo_clp"))
     assert(c.sheets("canon").length == 3)
   }
 
   test("discrepancy sheet: placeholder row when empty + quarantine allowed") {
-    import spark.implicits._
     val c = new Publish.InMemorySheets
-    val empty = Publish.mismatchRows(spark.createDataset(Seq(Report(
+    val empty = Publish.mismatchRows(Report(
       RunInfo("r", "t", Seq("pozos"), 30, 3, fail_fast = false),
       LastDraw(Some(5198L), None), Decision("skip", "full", 2, 0, "-"),
-      Seq.empty, ApiVersion))))
+      Seq.empty, ApiVersion))
     Publish.updateDiscrepancy(c, "disc", empty, Some(5198L), allowQuarantine = true)
     assert(c.sheets("disc") == Seq(Publish.mismatchHeader,
       Seq("5198", "", "", "", "")))
@@ -128,7 +129,7 @@ class PublishSpec extends SparkSpec {
   }
 
   test("dry-run diff: no-change message and +/- rendering") {
-    val rows = Publish.recordToRows(ds(record()))
+    val rows = Publish.rows(record())
     val header = Seq("sorteo", "fecha", "categoria", "pozo_clp")
     val current = header +: Seq(
       Seq("5417", "2026-04-26", "Desquite", "510"),
@@ -140,6 +141,59 @@ class PublishSpec extends SparkSpec {
     assert(diff.contains("- 5417, 2026-04-26, Loto, 999"))
     assert(diff.contains("+ 5417, 2026-04-26, Loto, 1000"))
     assert(diff.contains("+ 5417, 2026-04-26, Desquite, 510"))
+  }
+
+  /** A work dir holding `normalized.jsonl` with these records, and its
+    * sheets dir holding the given canonical worksheet, if any. */
+  private def workDir(records: Seq[NormalizedRecord],
+      sheet: Option[Seq[Seq[String]]]): (String, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dryrun")
+    java.nio.file.Files.writeString(dir.resolve("normalized.jsonl"),
+      records.map(Json.line(_) + "\n").mkString)
+    val sheetDir = dir.resolve("sheets").toString
+    sheet.foreach(s => SheetBackend.clearAndUpdate(sheetDir, "canonical", s.head, s.tail))
+    (dir.toString, sheetDir)
+  }
+
+  test("dry-run: 4-col rows diffed against the sheet; identical sheet → no changes") {
+    val header = Seq("sorteo", "fecha", "categoria", "pozo_clp")
+    val (same, sameSheet) = workDir(Seq(record()), Some(Seq(header,
+      Seq("5417", "2026-04-26", "Desquite", "510"),
+      Seq("5417", "2026-04-26", "Loto", "1000"))))
+    assert(Publish.dryRun(same, sameSheet) ==
+      "(No changes detected against the current sheet)")
+    val (stale, staleSheet) = workDir(Seq(record()), Some(Seq(header,
+      Seq("5417", "2026-04-26", "Loto", "999"))))
+    assert(Publish.dryRun(stale, staleSheet) == Seq("--- sheet:current",
+      "+++ proposed_update", "- 5417, 2026-04-26, Loto, 999",
+      "+ 5417, 2026-04-26, Desquite, 510", "+ 5417, 2026-04-26, Loto, 1000").mkString("\n"))
+  }
+
+  test("dry-run: premios record renders 8-col rows against an empty sheet") {
+    val r = record(Seq(Premio("6 aciertos", 900L, 0L), Premio("1 acierto", 100L, 2L)))
+    val (dir, sheetDir) = workDir(Seq(r), None)
+    val lines = Publish.dryRun(dir, sheetDir).split("\n").toSeq
+    assert(lines.take(3) == Seq("--- sheet:current", "+++ proposed_update",
+      "+ " + Publish.headerFor(8).mkString(", ")))
+    val added = lines.drop(3).map(_.stripPrefix("+ ").split(", ", 7).toSeq)
+    assert(added.map(_.take(6)) == Seq(
+      Seq("5417", "2026-04-26", "https://a.cl/", "1 acierto", "100", "2"),
+      Seq("5417", "2026-04-26", "https://a.cl/", "6 aciertos", "900", "0")))
+    assert(added.forall(_(6) ==
+      Json.line(r.pozos_proximo) + ", " + Json.line(r.provenance)))
+  }
+
+  test("dry-run: missing normalized.jsonl → PublishError; several records → first, warned") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-dryrun").toString
+    intercept[PublishError](Publish.dryRun(empty, s"$empty/sheets"))
+    val other = record().copy(sorteo = Some(9999L))
+    val (dir, sheetDir) = workDir(Seq(record(), other), None)
+    val err = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    val diff = try Publish.dryRun(dir, sheetDir) finally System.setErr(oldErr)
+    assert(err.toString("UTF-8").contains("[publish] 2 records; using first"))
+    assert(diff.contains("+ 5417, 2026-04-26, Loto, 1000") && !diff.contains("9999"))
   }
 
   test("slack: skip unchanged, summary text, quarantine blocks capped at 15") {
